@@ -106,14 +106,29 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MINHASH_P = 2147483647  # Mersenne prime 2^31-1: universal-hash modulus
+# The 8 affine hash-family members (a_i·h + b_i) mod p, drawn once at
+# random below p and fixed so the DuckDB oracles reproduce every
+# signature. Independent draws matter: multipliers that are small
+# multiples of one another (a_j = k·a_i) make h_j ≈ k·h_i over the
+# small values that win the minimum, so a document's minima coincide
+# across hashes and the bands stop being independent. Every
+# a_i·h + b_i stays below 2^62 (h < p < 2^31), inside int64.
+MINHASH_A = (
+    1981062502, 709609398, 924195532, 616968515,
+    552476333, 1903476442, 2048530956, 1990175957,
+)
+MINHASH_B = (
+    1771240523, 1981960463, 617710434, 613746199,
+    1478904384, 336630658, 1933343062, 1306234474,
+)
 
 
 def _mh_a(seed_expr: str) -> str:
-    return f"(1000003 * ({seed_expr} + 1)) % {MINHASH_P}"
+    return f"CAST({list(MINHASH_A)}[{seed_expr} + 1] AS BIGINT)"
 
 
 def _mh_b(seed_expr: str) -> str:
-    return f"(7919 * ({seed_expr} + 1) + 13) % {MINHASH_P}"
+    return f"CAST({list(MINHASH_B)}[{seed_expr} + 1] AS BIGINT)"
 
 
 _MINHASH_PAIRS_ORACLE = f"""
@@ -158,8 +173,8 @@ def minhash_band_rows(docs: DataFrame) -> DataFrame:
             *[
                 (
                     (
-                        F.lit(1000003 * (i + 1) % MINHASH_P) * F.col("h31")
-                        + F.lit((7919 * (i + 1) + 13) % MINHASH_P)
+                        F.lit(MINHASH_A[i]) * F.col("h31")
+                        + F.lit(MINHASH_B[i])
                     )
                     % MINHASH_P
                 ).alias(f"h{i}")

@@ -88,13 +88,16 @@ def _drain_commits(
     )
     try:
         _await_commit(q, cdir, base + n - 1, timeout)
-    finally:
+    except BaseException:
         # _await_commit already stops on its own error paths; a stop()
         # failure here must not mask its exception (ADVICE r11)
         try:
             q.stop()
         except Exception:
             pass
+        raise
+    # on success a failing stop() is the error to report
+    q.stop()
 
 
 def _start_drain(

@@ -38,7 +38,9 @@ def lakehouse_medallion(
     docs = load_table(spark, sf_dir, "documents")
     bronze.append(docs)
 
-    # silver: deterministic keyed dedup of everything bronze holds
+    # silver: deterministic keyed dedup of everything bronze holds —
+    # mirrored in full, so a text re-sent under a lower doc_id replaces
+    # its earlier row instead of sitting beside it
     w = Window.partitionBy("text").orderBy("doc_id")
     deduped = (
         bronze.read()
@@ -49,7 +51,9 @@ def lakehouse_medallion(
     if silver.current_version() == 0:
         silver.overwrite(deduped)
     else:
-        silver.merge_into(deduped, on=["doc_id"])
+        silver.merge_into(
+            deduped, on=["doc_id"], delete_unmatched_target=True
+        )
 
     # gold: the reference's count-per-group audit (etl.py:86) generalized
     stats = (

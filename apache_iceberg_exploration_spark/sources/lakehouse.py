@@ -53,6 +53,8 @@ from pyspark.sql import functions as F
 _INT_CHAIN = ["byte", "short", "integer", "long"]
 _FLOAT_CHAIN = ["float", "double"]
 _DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
+# absolute local paths Hadoop reports unescaped in _metadata.file_path
+_URI_PLAIN = re.compile(r"/[A-Za-z0-9/._\-=+~@,]*")
 
 
 def _promote_type(base_t, extra_t, col: str) -> str:
@@ -2875,26 +2877,34 @@ class LakehouseTable:
         """Open a set of manifest-listed leaf files, recovering
         hive-partition columns.
 
-        Files written with ``partition_by`` live under
+        Files that sit directly in their snapshot dir are opened by ONE
+        schema-merging read, whatever the number of commits they come
+        from: each ``DataFrameReader.parquet()`` call costs a Spark job
+        (the parallel footer merge) plus ~70 ms of JVM file indexing, so
+        a read per commit made planning grow with table history. Files
+        written with ``partition_by`` live under
         ``<root>/data/<snap>/<col>=<val>/...``; opening leaf paths
-        directly discards the directory-encoded values, so each
-        snapshot's files are read with ``basePath`` = its data dir —
+        directly discards the directory-encoded values, so each such
+        snapshot dir is read with ``basePath`` = its data dir —
         partition discovery then restores the columns AND partition
-        pruning stays available to filtered reads. One read per
-        contributing snapshot dir (bounded by compaction), unioned by
-        name so snapshots with differing schemas align.
+        pruning stays available to filtered reads. The reads are unioned
+        by name so snapshots with differing schemas align.
 
-        ``with_seq`` attaches each file's data sequence number as a
-        ``__seq`` literal column (files of one snapshot dir share a seq,
-        so it's a per-scan constant — zero per-row cost). ``with_pos``
-        attaches the row's physical identity (``__file``, ``__pos``) from
-        Spark's hidden ``_metadata`` struct — the coordinates positional
-        deletes target; generated by the parquet reader, not stored.
+        ``with_seq`` attaches each file's data sequence number as
+        ``__seq``. Files of one snapshot dir share a seq, so the merged
+        read looks it up per row from the file's dir
+        (``_metadata.file_path``) in a literal dir → seq map; a single
+        seq is a plain literal. Two fallbacks keep one read per seq,
+        each with a literal ``__seq``: a dir carrying files of two seqs,
+        and a merged read that raises (type-promoted history — parquet
+        schema merge refuses int→long / float→double across files).
+        ``with_pos`` attaches the row's physical identity (``__file``,
+        ``__pos``) from Spark's hidden ``_metadata`` struct — the
+        coordinates positional deletes target; generated by the parquet
+        reader, not stored.
 
-        Union ordering (ADVICE r11): flat seq-sorted groups precede
-        hive-partitioned groups, which differs from the pre-r11
-        sorted-(base, seq) interleaving for mixed flat+hive histories —
-        consumers must (and do) select columns by NAME, never
+        Union ordering (ADVICE r11): flat groups precede hive-partitioned
+        groups — consumers must (and do) select columns by NAME, never
         positionally, off this raw scan."""
         from . import encryption as E
 
@@ -2926,14 +2936,9 @@ class LakehouseTable:
                 while re.match(r"[^=/]+=", os.path.basename(base)):
                     base = os.path.dirname(base)
             groups.setdefault((base, seqs.get(f, 0)), []).append(f)
-        # Optimization (r11, guide §7.3 driver-side planning): each
-        # DataFrameReader.parquet() call costs ~70 ms of JVM file-index
-        # + footer schema inference, and a table touched by N commits
-        # (or a streaming batch with N task dirs) planned N calls per
-        # read. Files that sit DIRECTLY in their snapshot dir need no
-        # basePath (there are no hive segments to recover), so all such
-        # groups sharing a sequence number collapse into ONE read.
-        # Hive-partitioned groups keep the per-dir basePath read.
+        # files that sit DIRECTLY in their snapshot dir need no basePath
+        # (there are no hive segments to recover); hive-partitioned
+        # groups keep the per-dir basePath read
         flat: dict[int, list[str]] = {}
         hive_groups: list[tuple[tuple[str, int], list[str]]] = []
         for (base, seq), grp in sorted(groups.items()):
@@ -2942,22 +2947,75 @@ class LakehouseTable:
             else:
                 hive_groups.append(((base, seq), grp))
 
-        def _attach(s: DataFrame, seq: int) -> DataFrame:
+        def _attach(s: DataFrame, seq: F.Column) -> DataFrame:
             if with_seq:
-                s = s.withColumn("__seq", F.lit(seq))
+                s = s.withColumn("__seq", seq)
             if with_pos:
                 s = s.withColumn(
                     "__file", F.col("_metadata.file_path")
                 ).withColumn("__pos", F.col("_metadata.row_index"))
             return s
 
+        def _read(paths: list[str]) -> DataFrame:
+            return self.spark.read.option("mergeSchema", True).parquet(
+                *sorted(paths)
+            )
+
         scans = []
-        for seq, grp in sorted(flat.items()):
-            grp = sorted(grp)
+        merged = None
+        dir_seqs: dict[str, set[int]] = {}
+        for seq, grp in flat.items():
+            for f in grp:
+                dir_seqs.setdefault(
+                    os.path.abspath(os.path.dirname(f)), set()
+                ).add(seq)
+        if flat and (
+            not with_seq
+            or len(flat) == 1
+            or all(
+                # each dir holds one seq, and its path reads back from
+                # _metadata.file_path verbatim (no URI escaping)
+                len(sq) == 1 and _URI_PLAIN.fullmatch(d)
+                for d, sq in dir_seqs.items()
+            )
+        ):
             try:
-                s = self.spark.read.option("mergeSchema", True).parquet(
-                    *grp
+                merged = _read([f for grp in flat.values() for f in grp])
+            except Exception:
+                pass  # type-promoted history: one read per seq below
+        if merged is not None:
+            if len(flat) == 1 or not with_seq:
+                seq_col = F.lit(next(iter(flat)))
+            else:
+                seq_map = F.create_map(
+                    *[
+                        F.lit(x)
+                        for d, sq in sorted(dir_seqs.items())
+                        for x in ("file:" + d, min(sq))
+                    ]
                 )
+                path = F.col("_metadata.file_path")
+                name = F.substring_index(path, "/", -1)
+                # the file's dir as Spark spells local paths
+                # ("file:/abs/dir"), by string ops cheaper than a regex;
+                # any other spelling takes the normalising regex
+                seq_col = F.coalesce(
+                    F.element_at(
+                        seq_map,
+                        F.left(path, F.length(path) - F.length(name) - 1),
+                    ),
+                    F.element_at(
+                        seq_map,
+                        F.regexp_replace(
+                            path, "^file:/+(.*)/[^/]*$", "file:/$1"
+                        ),
+                    ),
+                )
+            scans.append(_attach(merged, seq_col))
+            flat = {}
+        for seq, grp in sorted(flat.items()):
+            try:
+                s = _read(grp)
             except Exception as exc:
                 # type-promoted history (int→long / float→double across
                 # commits): parquet schema merge refuses mixed physical
@@ -2972,9 +3030,7 @@ class LakehouseTable:
                     for f in grp:
                         subs.setdefault(os.path.dirname(f), []).append(f)
                     for _, fs in sorted(subs.items()):
-                        one = self.spark.read.option(
-                            "mergeSchema", True
-                        ).parquet(*fs)
+                        one = _read(fs)
                         s = (
                             one
                             if s is None
@@ -2984,14 +3040,14 @@ class LakehouseTable:
                         )
                 except Exception as exc2:
                     raise exc2 from exc
-            scans.append(_attach(s, seq))
+            scans.append(_attach(s, F.lit(seq)))
         for (base, seq), grp in hive_groups:
             s = (
                 self.spark.read.option("basePath", base)
                 .option("mergeSchema", True)
                 .parquet(*grp)
             )
-            scans.append(_attach(s, seq))
+            scans.append(_attach(s, F.lit(seq)))
         out = scans[0]
         for s in scans[1:]:
             out = out.unionByName(s, allowMissingColumns=True)
@@ -3121,27 +3177,87 @@ class LakehouseTable:
 
         return pq.ParquetFile(f).metadata.num_rows
 
-    def _read_delete_parquets(self, files: list[str]) -> DataFrame:
-        """Open delete key/coordinate parquets (tiny, always broadcast
-        downstream). Encrypted tables' delete files are encrypted like
-        data files — decrypt driver-side and ship as a local relation
-        (they are broadcast-sized by construction); plaintext files keep
-        the zero-copy JVM read."""
-        from . import encryption as E
+    def _read_delete_parquets(
+        self,
+        entries: list[dict],
+        cols: dict[str, str],
+        with_seq: bool = True,
+    ) -> DataFrame | None:
+        """One local relation over the delete files of ``entries``:
+        columns ``cols`` (file name → output name, the rename mapping)
+        plus, with ``with_seq``, each row's entry seq as ``__del_seq``.
+        None when the entries hold no rows — there is nothing to
+        anti-join.
 
-        if not any(E.is_encrypted_file(f) for f in files):
-            return self.spark.read.parquet(*files)
-        key = self._enc_key()
+        Delete files are keys or coordinates only and are broadcast
+        downstream anyway, so they are read driver-side with pyarrow
+        (decrypted first for encrypted tables) and shipped as ONE Arrow
+        table: planning launches no Spark job, however many entries are
+        pending, where a JVM ``spark.read.parquet`` per entry cost one
+        job each."""
         import pyarrow as pa
 
-        tbls = [E.read_table_auto(f, key) for f in files]
-        # ship as ONE Arrow table (Spark 4 createDataFrame accepts
-        # pyarrow directly) — ~2x faster than the old per-row tuple
-        # conversion for broadcast-sized key sets (optimization r11,
-        # guide §4: batches over pickled rows at every boundary)
-        return self.spark.createDataFrame(
-            pa.concat_tables(tbls, promote_options="permissive")
+        from . import encryption as E
+
+        files = [f for d in entries for f in d["files"]]
+        key = (
+            self._enc_key()
+            if any(E.is_encrypted_file(f) for f in files)
+            else None
         )
+        tbls = []
+        for d in entries:
+            for f in d["files"]:
+                t = E.read_table_auto(f, key, columns=list(cols))
+                t = t.select(list(cols)).rename_columns(list(cols.values()))
+                if with_seq:
+                    t = t.append_column(
+                        "__del_seq",
+                        pa.array([int(d["seq"])] * t.num_rows, pa.int64()),
+                    )
+                tbls.append(t)
+        if not tbls:
+            return None
+        tbl = pa.concat_tables(tbls, promote_options="permissive")
+        return self.spark.createDataFrame(tbl) if tbl.num_rows else None
+
+    def _eq_delete_relations(
+        self,
+        entries: list[dict],
+        renames: dict[str, list[str]] | None,
+    ) -> list[tuple[list[str], DataFrame]]:
+        """``(current key names, key relation)`` per distinct key set of
+        the equality-delete ``entries`` (usually one set); each relation
+        carries the keys under their current names plus ``__del_seq``.
+        A rename after a pending delete leaves the entry (and its
+        keys-only parquet) on the old name while the projected scan uses
+        the new one, so historical key names are mapped forward."""
+        rev = {
+            p: cur
+            for cur, priors in (renames or {}).items()
+            for p in priors
+        }
+        by_keys: dict[tuple[str, ...], list[dict]] = {}
+        for d in entries:
+            by_keys.setdefault(tuple(d["keys"]), []).append(d)
+        out = []
+        for keys, grp in by_keys.items():
+            cur_keys = [rev.get(k, k) for k in keys]
+            dels = self._read_delete_parquets(grp, dict(zip(keys, cur_keys)))
+            if dels is not None:
+                out.append((cur_keys, dels))
+        return out
+
+    @staticmethod
+    def _eq_delete_match(
+        df: DataFrame, dels: DataFrame, cur_keys: list[str]
+    ) -> F.Column:
+        """A row of ``df`` is matched by a key row of ``dels`` iff the
+        keys are null-safe equal AND the delete's seq >= the row's file
+        seq (rows appended after the delete survive)."""
+        cond = [df[k].eqNullSafe(dels[k]) for k in cur_keys]
+        cond.append(dels["__del_seq"] >= df["__seq"])
+        return functools_reduce(lambda a, b: a & b, cond)
 
     def _apply_deletes(
         self,
@@ -3164,52 +3280,28 @@ class LakehouseTable:
         and unlike equality deletes they can remove ONE of two identical
         rows.
 
-        Scale: one anti-join per distinct key set (usually one) plus at
-        most one for all positional entries; the delete side is
-        keys-only and tiny relative to data, so Catalyst broadcasts it —
-        the read-amplification merge-on-read trades for write-cheap
-        deletes, until compaction materializes them away."""
-        by_keys: dict[tuple[str, ...], list[dict]] = {}
-        pos_entries: list[dict] = []
-        for d in delete_files:
-            if d.get("pos"):
-                pos_entries.append(d)
-            else:
-                by_keys.setdefault(tuple(d["keys"]), []).append(d)
-        # a rename after a pending delete: the entry (and its keys-only
-        # parquet) use the old name, the projected scan the new one —
-        # map historical key names forward before joining
-        rev = {
-            p: cur
-            for cur, priors in (renames or {}).items()
-            for p in priors
-        }
-        for keys, entries in by_keys.items():
-            cur_keys = tuple(rev.get(k, k) for k in keys)
-            dels = None
-            for d in entries:
-                one = self._read_delete_parquets(d["files"]).select(
-                    *keys
-                )
-                for k, ck in zip(keys, cur_keys):
-                    if k != ck:
-                        one = one.withColumnRenamed(k, ck)
-                one = one.withColumn("__del_seq", F.lit(d["seq"]))
-                dels = one if dels is None else dels.unionByName(one)
-            cond = [df[k].eqNullSafe(dels[k]) for k in cur_keys]
-            cond.append(dels["__del_seq"] >= df["__seq"])
+        Scale: one broadcast anti-join per distinct key set (usually
+        one) plus at most one for all positional entries, whatever the
+        number of pending entries. The delete side is keys-only and tiny
+        relative to data: :meth:`_read_delete_parquets` reads it on the
+        driver and ships it as a local relation, so planning launches no
+        Spark job for it. This is the read amplification merge-on-read
+        trades for write-cheap deletes, until compaction materializes
+        the deletes away."""
+        for cur_keys, dels in self._eq_delete_relations(
+            [d for d in delete_files if not d.get("pos")], renames
+        ):
             df = df.join(
                 F.broadcast(dels),
-                functools_reduce(lambda a, b: a & b, cond),
+                self._eq_delete_match(df, dels, cur_keys),
                 "left_anti",
             )
-        if pos_entries:
-            dels = self._read_delete_parquets(
-                [f for d in pos_entries for f in d["files"]]
-            ).select(
-                F.col("__file").alias("__dfile"),
-                F.col("__pos").alias("__dpos"),
-            )
+        dels = self._read_delete_parquets(
+            [d for d in delete_files if d.get("pos")],
+            {"__file": "__dfile", "__pos": "__dpos"},
+            with_seq=False,
+        )
+        if dels is not None:
             df = df.join(
                 F.broadcast(dels),
                 (df["__file"] == dels["__dfile"])
@@ -5180,50 +5272,32 @@ class LakehouseTable:
                 df = self._scan_files(
                     scoped, fseq, with_seq=True, with_pos=True
                 )
-                rev = {
-                    p: cur
-                    for cur, priors in self._schema_renames(
-                        prev.get("schema")
-                    ).items()
-                    for p in priors
-                }
-                by_keys: dict[tuple[str, ...], list[dict]] = {}
-                for d in eq_entries:
-                    by_keys.setdefault(tuple(d["keys"]), []).append(d)
-                doomed = None
-                for keys, entries in by_keys.items():
-                    cur_keys = tuple(rev.get(k, k) for k in keys)
-                    dels = None
-                    for d in entries:
-                        one = self._read_delete_parquets(
-                            d["files"]
-                        ).select(*keys)
-                        for k, ck in zip(keys, cur_keys):
-                            if k != ck:
-                                one = one.withColumnRenamed(k, ck)
-                        one = one.withColumn(
-                            "__del_seq", F.lit(d["seq"])
-                        )
-                        dels = (
-                            one
-                            if dels is None
-                            else dels.unionByName(one)
-                        )
-                    # the reader's anti-join condition, inverted: rows
-                    # the entries WOULD kill become DV positions
-                    cond = [
-                        df[k].eqNullSafe(dels[k]) for k in cur_keys
+                # the raw scan holds a renamed column under every name
+                # it was written with; match keys on the current name
+                renames = self._schema_renames(prev.get("schema"))
+                for cur, priors in renames.items():
+                    names = [
+                        n
+                        for n in [cur, *reversed(priors)]
+                        if n in df.columns
                     ]
-                    cond.append(dels["__del_seq"] >= df["__seq"])
+                    if names and names != [cur]:
+                        df = df.withColumn(
+                            cur, F.coalesce(*[F.col(n) for n in names])
+                        )
+                # the reader's anti-join condition, inverted: rows the
+                # entries WOULD kill become DV positions
+                doomed = None
+                for cur_keys, dels in self._eq_delete_relations(
+                    eq_entries, renames
+                ):
                     hit = df.join(
                         F.broadcast(dels),
-                        functools_reduce(lambda a, b: a & b, cond),
+                        self._eq_delete_match(df, dels, cur_keys),
                         "left_semi",
                     ).select("__file", "__pos")
                     doomed = (
-                        hit
-                        if doomed is None
-                        else doomed.unionByName(hit)
+                        hit if doomed is None else doomed.unionByName(hit)
                     )
                 if doomed is not None:
                     # a row matched by two entries must count once

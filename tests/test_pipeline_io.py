@@ -36,6 +36,34 @@ def test_lakehouse_medallion_end_to_end(spark, tmp_path):
     assert tables2["silver"].read().count() == n_distinct_texts
 
 
+def test_lakehouse_medallion_resent_text_under_lower_id(spark, tmp_path):
+    """A later batch re-sends texts of an earlier one under LOWER ids:
+    silver keeps one row per distinct text (the lowest id) and gold
+    counts each text once."""
+    from apache_iceberg_exploration_spark.schemas import DOCUMENTS
+
+    def batch(name, rows):
+        d = str(tmp_path / name)
+        spark.createDataFrame(
+            [(i, t, "en", "web", len(t)) for i, t in rows], DOCUMENTS
+        ).write.parquet(f"{d}/documents.parquet")
+        return d
+
+    first = [(100 + i, f"text {i}") for i in range(100)]
+    second = [(i, f"text {i}") for i in range(10)] + [
+        (10 + i, f"new text {i}") for i in range(40)
+    ]
+    wh = str(tmp_path / "wh")
+    lakehouse_medallion(spark, batch("b1", first), wh)
+    tables = lakehouse_medallion(spark, batch("b2", second), wh)
+    silver = {r.text: r.doc_id for r in tables["silver"].read().collect()}
+    assert len(silver) == 140
+    assert tables["silver"].read().count() == 140
+    assert all(silver[f"text {i}"] == i for i in range(10))
+    gold = tables["gold"].read().collect()
+    assert sum(r.total_count for r in gold) == 140
+
+
 def test_csv_roundtrip(spark, tmp_path):
     """S8/S9: the test-backup variant's CSV layer (pandas to_csv/read_csv,
     test-backup.cpython-37.pyc orig 40-87) as distributed CSV sink+source."""

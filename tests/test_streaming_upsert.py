@@ -397,3 +397,41 @@ def test_drain_commits_one_query_n_batches(spark, tmp_path):
         if f.isdigit()
     ]
     assert sorted(commits) == ["0", "1", "2"]  # 3 micro-batches, 1 query
+
+
+class _StopFails:
+    """Stub streaming query whose stop() raises."""
+
+    def __init__(self):
+        self.stops = 0
+
+    def stop(self):
+        self.stops += 1
+        raise RuntimeError("stop failed")
+
+
+def test_drain_commits_stop_failure_after_success_raises(monkeypatch):
+    """A failing stop() on the success path is reported, not swallowed."""
+    from apache_iceberg_exploration_spark.operators import upsert as U
+
+    q = _StopFails()
+    monkeypatch.setattr(U, "_start_drain", lambda *a, **k: (q, "cdir", 0))
+    monkeypatch.setattr(U, "_await_commit", lambda *a, **k: None)
+    with pytest.raises(RuntimeError, match="stop failed"):
+        U._drain_commits(None, "src", "dst", "cp", 2)
+    assert q.stops == 1
+
+
+def test_drain_commits_stop_failure_keeps_await_error(monkeypatch):
+    """When the wait fails, a failing stop() must not mask its error."""
+    from apache_iceberg_exploration_spark.operators import upsert as U
+
+    def _timeout(*a, **k):
+        raise TimeoutError("batch never committed")
+
+    q = _StopFails()
+    monkeypatch.setattr(U, "_start_drain", lambda *a, **k: (q, "cdir", 0))
+    monkeypatch.setattr(U, "_await_commit", _timeout)
+    with pytest.raises(TimeoutError, match="never committed"):
+        U._drain_commits(None, "src", "dst", "cp", 2)
+    assert q.stops == 1
