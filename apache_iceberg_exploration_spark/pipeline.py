@@ -6,11 +6,13 @@ Airflow XCom (etl.py:45-96) and deletes bronze before silver reads it
 committed lakehouse snapshot:
 
   bronze  raw ingest, append-mode (incremental batches accumulate)
-  silver  keyed dedup, MERGE INTO (incremental upsert, not full rewrite)
+  silver  keyed dedup of all of bronze, overwrite (a full mirror)
   gold    aggregate, overwrite (small derived table)
 
-which is also the 100 TB shape: bronze appends are cheap fast-appends;
-silver merges rewrite only on key collisions; gold is tiny.
+Bronze appends are cheap fast-appends; silver is rewritten whole, since
+a text re-sent under a lower id can retire a row of any earlier batch
+(a full-sync merge would rewrite every file too, after a join with the
+old silver); gold is tiny.
 """
 
 from __future__ import annotations
@@ -48,12 +50,7 @@ def lakehouse_medallion(
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    if silver.current_version() == 0:
-        silver.overwrite(deduped)
-    else:
-        silver.merge_into(
-            deduped, on=["doc_id"], delete_unmatched_target=True
-        )
+    silver.overwrite(deduped)
 
     # gold: the reference's count-per-group audit (etl.py:86) generalized
     stats = (

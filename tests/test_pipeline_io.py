@@ -30,7 +30,7 @@ def test_lakehouse_medallion_end_to_end(spark, tmp_path):
         for r in tables["gold"].read().collect()
     }
     assert sum(c for c, _ in gold.values()) == n_distinct_texts
-    # re-run is incremental (silver merges, versions advance)
+    # re-run commits a new silver snapshot (versions advance)
     tables2 = lakehouse_medallion(spark, SF_SMOKE, str(tmp_path))
     assert tables2["silver"].current_version() == 2
     assert tables2["silver"].read().count() == n_distinct_texts

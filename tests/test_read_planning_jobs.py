@@ -92,6 +92,35 @@ def test_planning_jobs_flat_in_pending_commits(spark, tmp_path):
     assert counts[1] == counts[4], counts
 
 
+def test_many_snapshot_dirs_pending_deletes(spark, tmp_path):
+    """More snapshot dirs than a literal dir → seq map holds: the
+    merged scan takes its seqs from a broadcast relation instead, with
+    the same rows."""
+    root = str(tmp_path / "t")
+    state: dict[int, str] = {}
+    for i in range(70):
+        rows = [{"k": j, "v": f"a{i}-{j}"} for j in range(i * 5, i * 5 + 5)]
+        _commit(root, rows)
+        state.update({r["k"]: r["v"] for r in rows})
+    for u in range(2):
+        rows = [{"k": j, "v": f"u{u}-{j}"} for j in range(u * 97, u * 97 + 160)]
+        _commit(root, rows, keys=["k"])
+        state.update({r["k"]: r["v"] for r in rows})
+    t = LakehouseTable(spark, root)
+    out = t.read()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "__seq_dir" in plan  # the join arm, not the literal map
+    want = pd.DataFrame(sorted(state.items()), columns=["k", "v"])
+    pd.testing.assert_frame_equal(
+        _frame(out, ["k", "v"]), want, check_dtype=False
+    )
+    pd.testing.assert_frame_equal(
+        _frame(t.scan(where={"k": (100, 300)}), ["k", "v"]),
+        want[want.k.between(100, 300)].reset_index(drop=True),
+        check_dtype=False,
+    )
+
+
 def test_type_promoted_history_with_pending_deletes(spark, tmp_path):
     """int → long across commits: the merged read refuses the mixed
     physical types and the scan falls back to one read per seq, still
