@@ -23,10 +23,11 @@ Layout per table::
     <root>/snapshots/v{N}.json                    (manifest: full file list)
 
 A manifest lists the COMPLETE set of data files visible at that version,
-so reads never chase parent chains. Scale: reads are
-``spark.read.parquet(*files)`` — all pruning/pushdown intact; the
-manifest is O(files), kept small by compaction, exactly like Iceberg's
-manifest-list design.
+so reads never chase parent chains. Scale: a read is ONE
+``spark.read.schema(physical).parquet(*files)`` whose schema is planned
+on the driver from the files' footers — no schema-merge job, all
+pruning/pushdown intact; the manifest is O(files), kept small by
+compaction, exactly like Iceberg's manifest-list design.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ import os
 import re
 import shutil
 import time
+import unicodedata
 import uuid
 from dataclasses import dataclass, field
 from functools import reduce as functools_reduce
@@ -53,8 +55,38 @@ from pyspark.sql import functions as F
 _INT_CHAIN = ["byte", "short", "integer", "long"]
 _FLOAT_CHAIN = ["float", "double"]
 _DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
-# absolute local paths Hadoop reports unescaped in _metadata.file_path
-_URI_PLAIN = re.compile(r"/[A-Za-z0-9/._\-=+~@,]*")
+# ASCII characters java.net.URI escapes in a path component: all but
+# letters, digits, "/" and the unreserved/punct marks
+_URI_PATH_ESCAPES = {
+    c: f"%{c:02X}"
+    for c in range(0x80)
+    if not (chr(c).isalnum() or chr(c) in "-_.!~*'():@&=+$,;/")
+}
+
+
+def reader_path(path: str) -> str:
+    """A manifest path spelled the way Spark's parquet reader reports it
+    in ``_metadata.file_path``: Hadoop's ``Path("file", None,
+    path).toUri().toString()`` — ``file:`` plus the absolute path with
+    every character java.net.URI may not leave in a path
+    percent-escaped (space → ``%20``, ``%`` → ``%25``; ``+`` and
+    non-ASCII letters stay, non-ASCII spaces and controls become their
+    escaped UTF-8 bytes). ``inputFiles()`` spells the same file
+    ``file:///…`` instead, so it is not a key.
+
+    The one place the two spellings meet: per-row lookups and
+    coordinate joins key on the reader's verbatim path, spelled here
+    once per FILE on the driver, so no data row pays for a regex, and
+    stored coordinates map back through ``{reader_path(f): f}``."""
+    s = os.path.abspath(path).translate(_URI_PATH_ESCAPES)
+    if not s.isascii():
+        s = "".join(
+            "".join(f"%{b:02X}" for b in ch.encode())
+            if unicodedata.category(ch) in ("Zs", "Zl", "Zp", "Cc")
+            else ch
+            for ch in s
+        )
+    return "file:" + s
 
 
 def _promote_type(base_t, extra_t, col: str) -> str:
@@ -2559,53 +2591,36 @@ class LakehouseTable:
                 affected |= {
                     f for f in common if seqs.get(f, 0) <= eq_max
                 }
-            pos_targets: set[str] = set()
             for d in changed_dels:
                 if d.get("pos"):
-                    from . import encryption as _E
-
-                    for kf in d["files"]:
-                        try:
-                            col = _E.read_table_auto(
-                                kf, self._maybe_key(), columns=["__file"]
-                            ).column("__file")
-                        except (FileNotFoundError, OSError) as ex:
-                            # ADVICE r4 weighed a conservative fallback
-                            # (treat all common files as affected), but
-                            # that would be silently WRONG, not
-                            # conservative: the same coordinates are
-                            # needed again when the diff MATERIALIZES
-                            # the endpoint's effective rows (_side
-                            # applies this entry), and without them the
-                            # rows this entry killed read as alive —
-                            # their resurrection/deletion events vanish
-                            # from the feed. The information is
-                            # destroyed; refuse with direction instead
-                            # of an opaque IO stack. (Normal retention
-                            # can't get here: both GC passes keep
-                            # delete-key files of every retained
-                            # manifest, and changelog endpoints are by
-                            # construction readable manifests.)
-                            raise ValueError(
-                                "changelog: a position-delete entry in "
-                                f"the interval references coordinate "
-                                f"file {kf!r} which is unreadable "
-                                "(garbage-collected out-of-band?); the "
-                                "interval's row changes cannot be "
-                                "reconstructed — widen the interval "
-                                "past the damaged snapshot or re-sync "
-                                "the consumer from a full read"
-                            ) from ex
-                        for v in col.to_pylist():
-                            # coordinates store the parquet reader's
-                            # file URI (file:///...); manifests store
-                            # plain paths — normalize before comparing
-                            if v.startswith("file:"):
-                                v = v[5:]
-                                while v.startswith("//"):
-                                    v = v[1:]
-                            pos_targets.add(v)
-            affected |= pos_targets & common
+                    try:
+                        affected |= set(self._read_pos_coords([d], common))
+                    except (FileNotFoundError, OSError) as ex:
+                        # ADVICE r4 weighed a conservative fallback
+                        # (treat all common files as affected), but
+                        # that would be silently WRONG, not
+                        # conservative: the same coordinates are
+                        # needed again when the diff MATERIALIZES the
+                        # endpoint's effective rows (_side applies this
+                        # entry), and without them the rows this entry
+                        # killed read as alive — their
+                        # resurrection/deletion events vanish from the
+                        # feed. The information is destroyed; refuse
+                        # with direction instead of an opaque IO stack.
+                        # (Normal retention can't get here: both GC
+                        # passes keep delete-key files of every retained
+                        # manifest, and changelog endpoints are by
+                        # construction readable manifests.)
+                        raise ValueError(
+                            "changelog: a position-delete entry in the "
+                            "interval references coordinate files "
+                            f"{d['files']!r}, one of which is unreadable "
+                            "(garbage-collected out-of-band?); the "
+                            "interval's row changes cannot be "
+                            "reconstructed — widen the interval past the "
+                            "damaged snapshot or re-sync the consumer "
+                            "from a full read"
+                        ) from ex
 
         # deletion vectors: a common file whose DV entry differs between
         # the sides (bitmap added, replaced latest-wins, or dropped by a
@@ -2867,6 +2882,114 @@ class LakehouseTable:
             F.explode(events).alias("__e")
         ).select("__e.*")
 
+    @staticmethod
+    def _physical_reads(files: list[str]) -> list[tuple]:
+        """The explicit-schema reads that open ``files``, as (Spark
+        ``StructType``, files) pairs: ONE read whose schema is the union
+        of the files' footer schemas, all nullable, planned on the
+        driver so no reader needs a schema-merge job. Footers are read
+        with pyarrow on a thread pool (as :meth:`_collect_file_stats`
+        does). Spark-written files carry Spark's exact types under
+        ``org.apache.spark.sql.parquet.row.metadata``; pyarrow-written
+        ones (the streaming sink's) map Arrow → Spark the way Spark's
+        own parquet schema inference does. A column typed differently
+        across files (int→long, float→double, decimal widening history)
+        takes the promoted type (:func:`_promote_type`); Spark's readers
+        widen the narrower files' values to it when a schema is given.
+
+        One exception splits the read: pyarrow types a column that was
+        all NULL in its file as ``null`` (physically INT32 without
+        values), which the vectorized reader refuses to read as any
+        other type. Files holding such a column that other files type
+        are read apart, with the column left out of their schema, so it
+        reads back NULL by absence."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        import pyarrow.parquet as pq
+        from pyspark.sql import types as T
+        from pyspark.sql.pandas.types import from_arrow_type
+
+        def nullable(t):
+            # Spark reads every file-source column as nullable, nested
+            # levels included
+            if isinstance(t, T.StructType):
+                return T.StructType(
+                    [
+                        T.StructField(
+                            f.name, nullable(f.dataType), True, f.metadata
+                        )
+                        for f in t.fields
+                    ]
+                )
+            if isinstance(t, T.ArrayType):
+                return T.ArrayType(nullable(t.elementType), True)
+            if isinstance(t, T.MapType):
+                return T.MapType(t.keyType, nullable(t.valueType), True)
+            return t
+
+        def footer(f: str) -> T.StructType:
+            s = pq.read_schema(f)
+            spark_json = (s.metadata or {}).get(
+                b"org.apache.spark.sql.parquet.row.metadata"
+            )
+            if spark_json:
+                return nullable(T.StructType.fromJson(json.loads(spark_json)))
+            return T.StructType(
+                [
+                    T.StructField(
+                        a.name,
+                        nullable(
+                            from_arrow_type(a.type, prefer_timestamp_ntz=True)
+                        ),
+                    )
+                    for a in s
+                ]
+            )
+
+        if len(files) <= 1:
+            footers = [footer(f) for f in files]
+        else:
+            with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
+                footers = list(ex.map(footer, files))
+        union: dict[str, T.StructField] = {}
+        for st in footers:
+            for f in st.fields:
+                cur = union.get(f.name)
+                if cur is None or isinstance(cur.dataType, T.NullType):
+                    union[f.name] = f
+                elif cur.dataType != f.dataType and not isinstance(
+                    f.dataType, T.NullType
+                ):
+                    wide = _promote_type(
+                        cur.dataType.jsonValue(),
+                        f.dataType.jsonValue(),
+                        f.name,
+                    )
+                    union[f.name] = T.StructField(
+                        f.name,
+                        T._parse_datatype_json_value(wide),
+                        True,
+                        cur.metadata,
+                    )
+        reads: dict[frozenset, list[str]] = {}
+        for f, st in zip(files, footers):
+            omit = frozenset(
+                c.name
+                for c in st.fields
+                if isinstance(c.dataType, T.NullType)
+                and not isinstance(union[c.name].dataType, T.NullType)
+            )
+            reads.setdefault(omit, []).append(f)
+        return [
+            (
+                T.StructType(
+                    [c for c in union.values() if c.name not in omit]
+                ),
+                grp,
+            )
+            for omit, grp in sorted(reads.items(), key=lambda kv: len(kv[0]))
+        ]
+
     def _scan_files(
         self,
         files: list[str],
@@ -2878,31 +3001,27 @@ class LakehouseTable:
         hive-partition columns.
 
         Files that sit directly in their snapshot dir are opened by ONE
-        schema-merging read, whatever the number of commits they come
-        from: each ``DataFrameReader.parquet()`` call costs a Spark job
-        (the parallel footer merge) plus ~70 ms of JVM file indexing, so
-        a read per commit made planning grow with table history. Files
-        written with ``partition_by`` live under
-        ``<root>/data/<snap>/<col>=<val>/...``; opening leaf paths
-        directly discards the directory-encoded values, so each such
-        snapshot dir is read with ``basePath`` = its data dir —
-        partition discovery then restores the columns AND partition
-        pruning stays available to filtered reads. The reads are unioned
-        by name so snapshots with differing schemas align.
+        ``spark.read.schema(physical).parquet(*files)``, whatever the
+        number of commits, seqs or type histories they come from: the
+        schema is planned on the driver (:meth:`_physical_reads`, which
+        reads apart only files holding pyarrow's all-NULL ``null``
+        columns), so the read launches no schema-merge job, and Spark
+        widens type-promoted files to it. Files written with ``partition_by``
+        live under ``<root>/data/<snap>/<col>=<val>/...``; opening leaf
+        paths directly discards the directory-encoded values, so each
+        such snapshot dir is read with ``basePath`` = its data dir (and
+        its own planned schema) — partition discovery then restores the
+        columns AND partition pruning stays available to filtered reads.
+        The reads are unioned by name.
 
         ``with_seq`` attaches each file's data sequence number as
-        ``__seq``. Files of one snapshot dir share a seq, so the merged
-        read looks it up per row from the file's dir
-        (``_metadata.file_path``) in a dir → seq map (see
-        :meth:`_with_path_lookup`); a single seq is a plain literal.
-        Two fallbacks keep one read per seq,
-        each with a literal ``__seq``: a dir carrying files of two seqs,
-        and a merged read that raises (type-promoted history — parquet
-        schema merge refuses int→long / float→double across files).
-        ``with_pos`` attaches the row's physical identity (``__file``,
-        ``__pos``) from Spark's hidden ``_metadata`` struct — the
-        coordinates positional deletes target; generated by the parquet
-        reader, not stored.
+        ``__seq``: a literal when the files share one seq, else a
+        per-file lookup on the row's ``_metadata.file_path``
+        (:meth:`_with_path_lookup`). ``with_pos`` attaches the row's
+        physical identity (``__file``, ``__pos``) from Spark's hidden
+        ``_metadata`` struct — the reader's verbatim path spelling
+        (:func:`reader_path`) and row index, the coordinates positional
+        deletes target; generated by the parquet reader, not stored.
 
         Union ordering (ADVICE r11): flat groups precede hive-partitioned
         groups — consumers must (and do) select columns by NAME, never
@@ -2919,8 +3038,9 @@ class LakehouseTable:
             )
         data_root = os.path.join(self.path, "data")
         seqs = file_seq or {}
-        groups: dict[tuple[str, int], list[str]] = {}
-        for f in files:
+        flat: list[str] = []
+        hive_groups: dict[tuple[str, int], list[str]] = {}
+        for f in sorted(files):
             rel = os.path.relpath(f, data_root)
             parts = rel.split(os.sep)
             if parts and not parts[0].startswith(".."):
@@ -2936,107 +3056,40 @@ class LakehouseTable:
                 base = os.path.dirname(f)
                 while re.match(r"[^=/]+=", os.path.basename(base)):
                     base = os.path.dirname(base)
-            groups.setdefault((base, seqs.get(f, 0)), []).append(f)
-        # files that sit DIRECTLY in their snapshot dir need no basePath
-        # (there are no hive segments to recover); hive-partitioned
-        # groups keep the per-dir basePath read
-        flat: dict[int, list[str]] = {}
-        hive_groups: list[tuple[tuple[str, int], list[str]]] = []
-        for (base, seq), grp in sorted(groups.items()):
-            if all(os.path.dirname(f) == base for f in grp):
-                flat.setdefault(seq, []).extend(grp)
+            if os.path.dirname(f) == base:
+                flat.append(f)
             else:
-                hive_groups.append(((base, seq), grp))
+                hive_groups.setdefault((base, seqs.get(f, 0)), []).append(f)
 
-        def _attach(s: DataFrame, seq: F.Column | None) -> DataFrame:
+        def _attach(s: DataFrame, fseq: dict[str, int]) -> DataFrame:
+            lookup = with_seq and len(set(fseq.values())) > 1
+            if with_pos or lookup:
+                s = s.withColumn("__file", F.col("_metadata.file_path"))
             if with_pos:
-                s = s.withColumn(
-                    "__file", F.col("_metadata.file_path")
-                ).withColumn("__pos", F.col("_metadata.row_index"))
-            if with_seq and seq is not None:
-                s = s.withColumn("__seq", seq)
-            return s
-
-        def _read(paths: list[str]) -> DataFrame:
-            return self.spark.read.option("mergeSchema", True).parquet(
-                *sorted(paths)
-            )
+                s = s.withColumn("__pos", F.col("_metadata.row_index"))
+            if lookup:
+                s = self._with_path_lookup(s, fseq, "__seq", "__seq_file")
+            elif with_seq:
+                s = s.withColumn("__seq", F.lit(next(iter(fseq.values()))))
+            return s if with_pos or not lookup else s.drop("__file")
 
         scans = []
-        merged = None
-        dir_seqs: dict[str, set[int]] = {}
-        for seq, grp in flat.items():
-            for f in grp:
-                dir_seqs.setdefault(
-                    os.path.abspath(os.path.dirname(f)), set()
-                ).add(seq)
-        if flat and (
-            not with_seq
-            or len(flat) == 1
-            or all(
-                # each dir holds one seq, and its path reads back from
-                # _metadata.file_path verbatim (no URI escaping)
-                len(sq) == 1 and _URI_PLAIN.fullmatch(d)
-                for d, sq in dir_seqs.items()
-            )
-        ):
-            try:
-                merged = _read([f for grp in flat.values() for f in grp])
-            except Exception:
-                pass  # type-promoted history: one read per seq below
-        if merged is not None:
-            if len(flat) == 1 or not with_seq:
-                merged = _attach(merged, F.lit(next(iter(flat))))
-            else:
-                # the row's snapshot dir, spelled like a manifest path
-                merged = self._with_path_lookup(
-                    _attach(merged, None),
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"),
-                        "^file:/+(.*)/[^/]*$",
-                        "/$1",
-                    ),
-                    {d: min(sq) for d, sq in dir_seqs.items()},
-                    "__seq",
-                    "__seq_dir",
+        if flat:
+            for schema, grp in self._physical_reads(flat):
+                scans.append(
+                    _attach(
+                        self.spark.read.schema(schema).parquet(*grp),
+                        {f: seqs.get(f, 0) for f in grp},
+                    )
                 )
-            scans.append(merged)
-            flat = {}
-        for seq, grp in sorted(flat.items()):
-            try:
-                s = _read(grp)
-            except Exception as exc:
-                # type-promoted history (int→long / float→double across
-                # commits): parquet schema merge refuses mixed physical
-                # types — fall back to one read per dir, coerced by
-                # unionByName like the pre-merge shape. A NON-schema
-                # failure (missing/corrupt file, FS error) will fail the
-                # per-dir reads too — chain the original merged-read
-                # error so diagnosis sees both (ADVICE r11)
-                try:
-                    s = None
-                    subs: dict[str, list[str]] = {}
-                    for f in grp:
-                        subs.setdefault(os.path.dirname(f), []).append(f)
-                    for _, fs in sorted(subs.items()):
-                        one = _read(fs)
-                        s = (
-                            one
-                            if s is None
-                            else s.unionByName(
-                                one, allowMissingColumns=True
-                            )
-                        )
-                except Exception as exc2:
-                    raise exc2 from exc
-            scans.append(_attach(s, F.lit(seq)))
-        for (base, seq), grp in hive_groups:
-            s = (
-                self.spark.read.option("basePath", base)
-                .option("mergeSchema", True)
-                .parquet(*grp)
-            )
-            scans.append(_attach(s, F.lit(seq)))
+        for (base, seq), hive in sorted(hive_groups.items()):
+            for schema, grp in self._physical_reads(hive):
+                s = (
+                    self.spark.read.option("basePath", base)
+                    .schema(schema)
+                    .parquet(*grp)
+                )
+                scans.append(_attach(s, {f: seq for f in grp}))
         out = scans[0]
         for s in scans[1:]:
             out = out.unionByName(s, allowMissingColumns=True)
@@ -3054,7 +3107,8 @@ class LakehouseTable:
         the union PHYSICAL schema (planned driver-side from the key
         sidecars' plaintext Arrow schemas, no decryption), hive
         partition columns recovered from the path, plus ``__seq`` /
-        ``__file`` / ``__pos`` when requested. Everything above this
+        ``__file`` (spelled like the JVM reader's, :func:`reader_path`) /
+        ``__pos`` when requested. Everything above this
         method (declared projection, defaults, renames, MoR deletes,
         lineage) is unchanged.
 
@@ -3095,7 +3149,7 @@ class LakehouseTable:
             ]
         out_schema = pa.schema(list(union) + extra)
         spec_rows = [
-            (f, int(seqs.get(f, 0)), json.dumps(parts.get(f, {})))
+            (f, int(seqs.get(f, 0)), json.dumps(parts.get(f, {})), reader_path(f))
             for f in sorted(files)
         ]
 
@@ -3132,8 +3186,10 @@ class LakehouseTable:
                             )
                         )
                     if with_pos:
+                        # the JVM reader's spelling, so lookups and
+                        # coordinates key alike on either scan
                         arrays.append(
-                            pa.chunked_array([pa.array([f] * n)])
+                            pa.chunked_array([pa.array([row["r"]] * n)])
                         )
                         arrays.append(
                             pa.chunked_array(
@@ -3145,7 +3201,7 @@ class LakehouseTable:
                     ).to_batches()
 
         plan = self.spark.createDataFrame(
-            spec_rows, "f string, s long, p string"
+            spec_rows, "f string, s long, p string, r string"
         ).repartition(max(1, len(files)))
         return plan.mapInArrow(task, from_arrow_schema(out_schema))
 
@@ -3247,35 +3303,87 @@ class LakehouseTable:
         cond.append(dels["__del_seq"] >= df["__seq"])
         return functools_reduce(lambda a, b: a & b, cond)
 
+    def _read_pos_coords(
+        self, entries: list[dict], files, stale: bool = False
+    ) -> dict[str, "np.ndarray"]:
+        """{manifest path: int64 row positions} of the position-delete
+        ``entries``' coordinates that target one of ``files``, read on
+        the driver with pyarrow (decrypted when needed, like
+        :meth:`_read_delete_parquets`) — the one reader of stored
+        coordinates. A coordinate names its file in the reader's
+        spelling (:func:`reader_path`), or as the plain path where an
+        encrypted scan wrote it before scans shared that spelling; both
+        map back. Coordinates of files not in ``files`` (rewritten away
+        since) are dropped, or with ``stale`` kept under their stored
+        spelling."""
+        import pyarrow as pa
+
+        from . import encryption as E
+
+        back = {}
+        for f in files:
+            back[f] = back[reader_path(f)] = f
+        coord_files = [kf for d in entries for kf in d["files"]]
+        if not coord_files:
+            return {}
+        key = (
+            self._enc_key()
+            if any(E.is_encrypted_file(kf) for kf in coord_files)
+            else None
+        )
+        grouped = (
+            pa.concat_tables(
+                [
+                    E.read_table_auto(kf, key, columns=["__file", "__pos"])
+                    for kf in coord_files
+                ],
+                promote_options="permissive",
+            )
+            .group_by("__file")
+            .aggregate([("__pos", "list")])
+        )
+        lists = grouped.column("__pos_list").combine_chunks()
+        pos = lists.values.to_numpy(zero_copy_only=False)
+        offs = lists.offsets.to_numpy()
+        return {
+            back.get(v, v): pos[offs[i] : offs[i + 1]]
+            for i, v in enumerate(grouped.column("__file").to_pylist())
+            if stale or v in back
+        }
+
     def _apply_deletes(
         self,
         df: DataFrame,
+        files: list[str],
         delete_files: list[dict],
         renames: dict[str, list[str]] | None = None,
         delete_vectors: dict | None = None,
     ) -> DataFrame:
-        """Merge-on-read: anti-join pending equality-delete keys against
-        the scan. A row is removed iff some delete entry matches its keys
-        AND the delete's seq >= the row's file seq — rows appended after
-        the delete survive (Iceberg v2 sequence-number semantics).
-        Expects ``__seq`` on ``df``; drops it.
+        """Merge-on-read over a scan of ``files``: anti-join pending
+        equality-delete keys against it. A row is removed iff some
+        delete entry matches its keys AND the delete's seq >= the row's
+        file seq — rows appended after the delete survive (Iceberg v2
+        sequence-number semantics). Expects ``__seq`` on ``df`` (and
+        ``__file``/``__pos`` for positional deletes and DVs); leaves
+        them for the caller to drop.
 
         Positional entries (``pos: True`` — Iceberg v2 position deletes)
-        instead anti-join on the row's physical coordinates
-        (``__file``, ``__pos``): they target specific rows of specific
-        files, so no sequence check is needed (a later append can never
-        reuse a deleted file's path — data dirs are per-commit unique),
-        and unlike equality deletes they can remove ONE of two identical
-        rows.
+        and deletion vectors instead anti-join on the row's physical
+        coordinates (``__file``, ``__pos``): they target specific rows
+        of specific files, so no sequence check is needed (a later
+        append can never reuse a deleted file's path — data dirs are
+        per-commit unique), and unlike equality deletes they can remove
+        ONE of two identical rows.
 
         Scale: one broadcast anti-join per distinct key set (usually
-        one) plus at most one for all positional entries, whatever the
-        number of pending entries. The delete side is keys-only and tiny
-        relative to data: :meth:`_read_delete_parquets` reads it on the
-        driver and ships it as a local relation, so planning launches no
-        Spark job for it. This is the read amplification merge-on-read
-        trades for write-cheap deletes, until compaction materializes
-        the deletes away."""
+        one) plus one for all coordinates, whatever the number of
+        pending entries. The delete side is keys or coordinates only and
+        tiny relative to data: it is read on the driver
+        (:meth:`_read_delete_parquets`, :meth:`_read_pos_coords`) and
+        shipped as a local relation, so planning launches no Spark job
+        for it. This is the read amplification merge-on-read trades for
+        write-cheap deletes, until compaction materializes the deletes
+        away."""
         for cur_keys, dels in self._eq_delete_relations(
             [d for d in delete_files if not d.get("pos")], renames
         ):
@@ -3284,102 +3392,95 @@ class LakehouseTable:
                 self._eq_delete_match(df, dels, cur_keys),
                 "left_anti",
             )
-        dels = self._read_delete_parquets(
-            [d for d in delete_files if d.get("pos")],
-            {"__file": "__dfile", "__pos": "__dpos"},
+        import numpy as np
+
+        dead = self._read_pos_coords(
+            [d for d in delete_files if d.get("pos")], files
         )
-        if dels is not None:
+        rels = []
+        dvs = delete_vectors or {}
+        # deletion vectors, two decode regimes (the r6 lineage
+        # create_map lesson: fixed Python plan machinery dominates
+        # small reads): under the threshold the driver decodes the
+        # bitmaps locally — checksum-verified, no Python-worker stage —
+        # into the position-delete relation; above it the
+        # O(files-with-DVs) index fans out via mapInPandas so blob bytes
+        # and position lists never touch the driver.
+        if dvs and sum(
+            int(e.get("cardinality", 0)) for e in dvs.values()
+        ) <= self._int_property("read.dv.inline-threshold-rows"):
+            for f, e in dvs.items():
+                p = self._dv_decode(self._read_dv_blob(e))
+                dead[f] = np.concatenate([dead[f], p]) if f in dead else p
+            dvs = {}
+        if dead:
+            import pyarrow as pa
+
+            lens = [len(p) for p in dead.values()]
+            rels.append(
+                self.spark.createDataFrame(
+                    pa.table(
+                        {
+                            "__dfile": pa.array(
+                                [reader_path(f) for f in dead]
+                            ).take(np.repeat(np.arange(len(lens)), lens)),
+                            "__dpos": np.concatenate(list(dead.values())),
+                        }
+                    )
+                )
+            )
+        if dvs:
+            import pandas as _pd
+
+            decode = self._dv_decode
+            tkey = (
+                self._maybe_key()
+                if any(e.get("enc") for e in dvs.values())
+                else None
+            )
+            entries = [
+                (
+                    reader_path(f),
+                    e["path"],
+                    int(e["offset"]),
+                    int(e["length"]),
+                    e.get("sha256"),
+                    bool(e.get("enc")),
+                )
+                for f, e in dvs.items()
+            ]
+            edf = self.spark.createDataFrame(
+                entries,
+                "__dvf string, __dvp string, __dvo long, __dvl long,"
+                " __dvh string, __dve boolean",
+            )
+
+            def _expand(batches):
+                for pdf in batches:
+                    for f, p, o, ln, dg, enc in pdf.itertuples(index=False):
+                        blob = _read_dv_bytes(
+                            p,
+                            int(o),
+                            int(ln),
+                            dg,
+                            table_key=tkey if enc else None,
+                            encrypted=bool(enc),
+                        )
+                        yield _pd.DataFrame(
+                            {"__dfile": f, "__dpos": decode(blob)}
+                        )
+
+            rels.append(
+                edf.mapInPandas(_expand, "__dfile string, __dpos long")
+            )
+        for rel in rels:
             df = df.join(
-                F.broadcast(dels),
-                (df["__file"] == dels["__dfile"])
-                & (df["__pos"] == dels["__dpos"]),
+                F.broadcast(rel),
+                (df["__file"] == rel["__dfile"])
+                & (df["__pos"] == rel["__dpos"]),
                 "left_anti",
             )
-        if delete_vectors:
-            # deletion vectors → ONE broadcast anti-join on the physical
-            # coordinates, shared with the pos-delete shape above. No
-            # sequence check: positions pin exact rows of immutable
-            # files, same argument as position deletes. Two decode
-            # regimes (the r6 lineage create_map lesson: fixed Python
-            # plan machinery dominates small reads): under the
-            # threshold the driver decodes the bitmaps locally —
-            # checksum-verified, no Python-worker stage — and ships the
-            # pairs as a local relation; above it the O(files-with-DVs)
-            # index fans out via mapInPandas so blob bytes and position
-            # lists never touch the driver.
-            total_dead = sum(
-                int(e.get("cardinality", 0))
-                for e in delete_vectors.values()
-            )
-            if total_dead <= self._int_property(
-                "read.dv.inline-threshold-rows"
-            ):
-                pairs = [
-                    (f, int(p))
-                    for f, e in delete_vectors.items()
-                    for p in self._dv_decode(self._read_dv_blob(e))
-                ]
-                dv_dels = self.spark.createDataFrame(
-                    pairs, "__dfile string, __dpos long"
-                )
-            else:
-                import pandas as _pd
-
-                decode = self._dv_decode
-                tkey = (
-                    self._maybe_key()
-                    if any(
-                        e.get("enc") for e in delete_vectors.values()
-                    )
-                    else None
-                )
-                entries = [
-                    (
-                        f,
-                        e["path"],
-                        int(e["offset"]),
-                        int(e["length"]),
-                        e.get("sha256"),
-                        bool(e.get("enc")),
-                    )
-                    for f, e in delete_vectors.items()
-                ]
-                edf = self.spark.createDataFrame(
-                    entries,
-                    "__dvf string, __dvp string, __dvo long, __dvl long,"
-                    " __dvh string, __dve boolean",
-                )
-
-                def _expand(batches):
-                    for pdf in batches:
-                        for f, p, o, ln, dg, enc in pdf.itertuples(
-                            index=False
-                        ):
-                            blob = _read_dv_bytes(
-                                p,
-                                int(o),
-                                int(ln),
-                                dg,
-                                table_key=tkey if enc else None,
-                                encrypted=bool(enc),
-                            )
-                            yield _pd.DataFrame(
-                                {"__dfile": f, "__dpos": decode(blob)}
-                            )
-
-                dv_dels = edf.mapInPandas(
-                    _expand, "__dfile string, __dpos long"
-                )
-            # DV entries key on the manifest's PLAIN path; the reader
-            # reports file:///-URIs — normalize the data side
-            dnorm = F.regexp_replace(df["__file"], "^file:/+", "/")
-            df = df.join(
-                F.broadcast(dv_dels),
-                (dnorm == dv_dels["__dfile"])
-                & (df["__pos"] == dv_dels["__dpos"]),
-                "left_anti",
-            )
-        return df.drop("__seq", "__file", "__pos")
+        return df
 
     def _project_to_schema(
         self,
@@ -3458,30 +3559,20 @@ class LakehouseTable:
                 for c in (extra_cols or [])
                 if c in df.columns and c not in keep
             ]
-            norm_file = F.regexp_replace(
-                F.col("__file"), "^file:/+", "/"
-            )
-            inline = default_gaps and all(
-                len(s) <= 64 for _, s in default_gaps.values()
-            )
-            if default_gaps and not inline:
-                # wide gap sets: ONE tiny broadcast relation
-                # (file → missing defaulted columns) joined on the
-                # row's source file — O(pre-add files) metadata, never
-                # a shuffle of the data side (the lineage-map pattern)
+            if default_gaps:
+                # per file, the defaulted columns it lacks — looked up
+                # on the row's source file, like every per-file value
                 gap_rows: dict[str, list[str]] = {}
                 for cname, (_, lacking) in default_gaps.items():
                     for fp in lacking:
                         gap_rows.setdefault(fp, []).append(cname)
-                gdf = self.spark.createDataFrame(
-                    [(fp, sorted(cs)) for fp, cs in gap_rows.items()],
-                    "__gap_file string, __gaps array<string>",
+                df = self._with_path_lookup(
+                    df,
+                    {fp: sorted(cs) for fp, cs in gap_rows.items()},
+                    "__gaps",
+                    "__gap_file",
+                    "array<string>",
                 )
-                df = df.join(
-                    F.broadcast(gdf),
-                    norm_file == gdf["__gap_file"],
-                    "left",
-                ).drop("__gap_file")
             cols = []
             for f in declared.fields:
                 raw = self._renamed_col(
@@ -3507,17 +3598,9 @@ class LakehouseTable:
                 else:
                     expr = fin(raw)
                 if raw is not None and f.name in default_gaps:
-                    val, lacking = default_gaps[f.name]
-                    if inline:
-                        miss = norm_file.isin(*sorted(lacking))
-                    else:
-                        miss = F.array_contains(
-                            F.coalesce(
-                                F.col("__gaps"),
-                                F.array().cast("array<string>"),
-                            ),
-                            f.name,
-                        )
+                    # NULL gaps (a file lacking none) → NULL → otherwise
+                    miss = F.array_contains(F.col("__gaps"), f.name)
+                    val = default_gaps[f.name][0]
                     expr = F.when(miss, fin(F.lit(val))).otherwise(expr)
                 cols.append(expr.alias(f.name))
             cols += [F.col(c) for c in keep]
@@ -3525,29 +3608,14 @@ class LakehouseTable:
         if with_lineage:
             df = self._attach_lineage_cols(df, manifest)
         if deletes or dvs:
-            if keep_coords:
-                # stash coordinate copies through the anti-joins (which
-                # drop the originals), then restore
-                df = df.withColumn("__kf", F.col("__file")).withColumn(
-                    "__kp", F.col("__pos")
-                )
             df = self._apply_deletes(
                 df,
+                files,
                 deletes,
                 renames=self._schema_renames(schema_json),
                 delete_vectors=dvs,
             )
-            if keep_coords:
-                df = (
-                    df.withColumn("__file", F.col("__kf"))
-                    .withColumn("__pos", F.col("__kp"))
-                    .drop("__kf", "__kp")
-                )
-        elif with_lineage and not keep_coords:
-            df = df.drop("__seq", "__file", "__pos")
-        elif with_lineage:
-            df = df.drop("__seq")
-        return df
+        return df.drop("__seq", *([] if keep_coords else ["__file", "__pos"]))
 
     @staticmethod
     def _initial_default_gaps(manifest: dict, declared) -> dict:
@@ -3737,7 +3805,6 @@ class LakehouseTable:
             from ..functions.hashing import hash64
 
             df = self._scan_files(todo, None, with_pos=True)
-            norm = F.regexp_replace(F.col("__file"), "^file:/+", "/")
             pairs = F.array(
                 *[
                     F.struct(
@@ -3771,11 +3838,12 @@ class LakehouseTable:
                 cur = registers[row["col"]]
                 if r > cur.get(b, 0):
                     cur[b] = r
+            back = {reader_path(f): f for f in todo}
             counts = (
-                df.groupBy(norm.alias("f")).count().collect()
+                df.groupBy("__file").count().collect()
             )  # bounded: |new files| rows
             for row in counts:
-                file_rows[row["f"]] = int(row["count"])
+                file_rows[back[row["__file"]]] = int(row["count"])
         blob = {
             "version": v,
             "mode": "incremental" if incremental else "full",
@@ -3851,41 +3919,42 @@ class LakehouseTable:
     def _with_path_lookup(
         self,
         df: DataFrame,
-        key: F.Column,
-        values: dict[str, int],
+        values: dict,
         name: str,
         key_name: str,
+        dtype: str = "long",
     ) -> DataFrame:
-        """``df`` plus a long column ``name`` = ``values[key]`` per row
-        (NULL for a key not in ``values``), ``key`` being a per-row path
-        expression. Up to 64 entries the map is an inline literal: no
-        broadcast exchange and no join stage, whose fixed plan machinery
-        cost ~0.3 s per action. Spark searches a literal map key by key
-        on every row, so a wider map becomes a (``key_name``, ``name``)
+        """``df`` plus a ``dtype`` column ``name`` = ``values[file]`` per
+        row (NULL for a file not in ``values``), ``values`` being keyed
+        by manifest path — the one way a per-file attribute (``__seq``,
+        the lineage base, the initial-default gaps) reaches the rows.
+        The key is the row's verbatim ``__file`` (``_metadata.file_path``);
+        the driver spells each manifest path that way once
+        (:func:`reader_path`), so no row pays for a regex.
+
+        Up to 64 entries the map is an inline literal: no broadcast
+        exchange and no join stage, whose fixed plan machinery cost
+        ~0.3 s per action. Spark searches a literal map key by key on
+        every row, so a wider map becomes a (``key_name``, ``name``)
         relation broadcast-joined instead. Per aggregate on local[4]:
         over 400k rows, literal vs joined took 0.45 vs 0.76 s at 64
         entries, 0.57 vs 0.74 s at 200 and 1.16 vs 0.94 s at 1,000; over
         2M rows, 1.18 vs 1.28 s at 64 and 1.29 vs 1.18 s at 200."""
-        if len(values) <= 64:
-            pairs = [
-                F.lit(x) for k, v in sorted(values.items()) for x in (k, v)
-            ]
+        spelled = sorted((reader_path(f), v) for f, v in values.items())
+        if len(spelled) <= 64:
+            pairs = [F.lit(x) for kv in spelled for x in kv]
             col = (
-                F.element_at(F.create_map(*pairs), key)
+                F.element_at(F.create_map(*pairs), F.col("__file"))
                 if pairs
                 else F.lit(None)
             )
-            return df.withColumn(name, col.cast("long"))
+            return df.withColumn(name, col.cast(dtype))
         rel = self.spark.createDataFrame(
-            sorted(values.items()), f"{key_name} string, {name} long"
+            spelled, f"{key_name} string, {name} {dtype}"
         )
-        return (
-            df.withColumn("__lk_row", key)
-            .join(
-                F.broadcast(rel), F.col("__lk_row") == rel[key_name], "left"
-            )
-            .drop("__lk_row", key_name)
-        )
+        return df.join(
+            F.broadcast(rel), df["__file"] == rel[key_name], "left"
+        ).drop(key_name)
 
     def _attach_lineage_cols(self, df: DataFrame, manifest: dict) -> DataFrame:
         """Compute ``_row_id`` / ``_last_updated_version`` from the
@@ -3905,8 +3974,6 @@ class LakehouseTable:
                 "lineage tracking or is a branch-chain manifest (ids are "
                 "assigned at publish) — commit once (any write) to assign"
             )
-        # the reader reports file:///-URIs; manifests store plain paths
-        norm = F.regexp_replace(F.col("__file"), "^file:/+", "/")
         files = manifest["files"]
         known = [f for f in files if bases.get(f) is not None]
         if len(known) < len(files) and "__row_id" not in df.columns:
@@ -3921,11 +3988,7 @@ class LakehouseTable:
                 "without backfill) — commit once (any write) to assign"
             )
         df = self._with_path_lookup(
-            df,
-            norm,
-            {f: int(bases[f]) for f in known},
-            "__lin_base",
-            "__lin_file",
+            df, {f: int(bases[f]) for f in known}, "__lin_base", "__lin_file"
         )
         phys_rid = (
             F.col("__row_id")
@@ -4955,25 +5018,11 @@ class LakehouseTable:
 
         def compute(base: int) -> tuple[dict | None, list[str]]:
             manifest = self._read_manifest(base)
-            pending = manifest.get("delete_files", [])
-            dvs = manifest.get("delete_vectors", {})
-            df = self._scan_files(
-                manifest["files"],
-                manifest.get("file_seq"),
-                with_seq=bool(pending),
-                with_pos=True,
+            doomed = (
+                self._project_to_schema(manifest, keep_coords=True)
+                .filter(condition)
+                .select("__file", "__pos")
             )
-            if pending or dvs:
-                # keep coordinates through the anti-joins:
-                # _apply_deletes drops them, so stash copies
-                df = df.withColumn("__kf", F.col("__file")).withColumn(
-                    "__kp", F.col("__pos")
-                )
-                df = self._apply_deletes(df, pending, delete_vectors=dvs)
-                df = df.withColumn("__file", F.col("__kf")).withColumn(
-                    "__pos", F.col("__kp")
-                )
-            doomed = df.filter(condition).select("__file", "__pos")
             snap_id, del_files = self._write_data_files(doomed)
             entry = {
                 "files": del_files,
@@ -5107,27 +5156,14 @@ class LakehouseTable:
                 scoped = self._partition_prune(manifest, prune, scoped)
             if not scoped:
                 return None, []  # nothing can match: no commit
-            pending = manifest.get("delete_files", [])
-            dvs = manifest.get("delete_vectors", {})
-            df = self._scan_files(
-                scoped,
-                manifest.get("file_seq"),
-                with_seq=bool(pending),
-                with_pos=True,
+            doomed = (
+                self._project_to_schema(
+                    {**manifest, "files": scoped}, keep_coords=True
+                )
+                .filter(condition)
+                .select("__file", "__pos")
             )
-            if pending or dvs:
-                # already-dead rows (pending MoR deletes, existing DVs)
-                # are not re-targeted; stash coordinates through the
-                # anti-joins
-                df = df.withColumn("__kf", F.col("__file")).withColumn(
-                    "__kp", F.col("__pos")
-                )
-                df = self._apply_deletes(df, pending, delete_vectors=dvs)
-                df = df.withColumn("__file", F.col("__kf")).withColumn(
-                    "__pos", F.col("__kp")
-                )
-            doomed = df.filter(condition).select("__file", "__pos")
-            new_pos = self._pack_coords_to_positions(doomed)
+            new_pos = self._pack_coords_to_positions(doomed, scoped)
             if not new_pos:
                 return None, []  # no matching rows: no commit
             base_dv = manifest.get("delete_vectors", {})
@@ -5188,26 +5224,7 @@ class LakehouseTable:
             ]
             if not pos_entries:
                 return prev
-            coords = (
-                self.spark.read.parquet(
-                    *[f for d in pos_entries for f in d["files"]]
-                )
-                .select(
-                    F.regexp_replace("__file", "^file:/+", "/").alias(
-                        "__file"
-                    ),
-                    "__pos",
-                )
-                .groupBy("__file")
-                .agg(F.collect_list("__pos").alias("pos"))
-                .collect()
-            )
-            live = set(prev["files"])
-            new_pos = {
-                r["__file"]: r["pos"]
-                for r in coords
-                if r["__file"] in live
-            }
+            new_pos = self._read_pos_coords(pos_entries, prev["files"])
             base_dv = prev.get("delete_vectors", {})
             merged = dict(base_dv)
             if new_pos:
@@ -5314,7 +5331,7 @@ class LakehouseTable:
                 if doomed is not None:
                     # a row matched by two entries must count once
                     new_pos = self._pack_coords_to_positions(
-                        doomed.distinct()
+                        doomed.distinct(), scoped
                     )
             base_dv = prev.get("delete_vectors", {})
             merged = dict(base_dv)
@@ -5343,11 +5360,15 @@ class LakehouseTable:
 
         return self._commit_with_retry(build)
 
-    def _pack_coords_to_positions(self, coords: DataFrame) -> dict:
-        """(__file, __pos) rows → {plain file path: sorted int64
-        positions}. Positions are bitmap-packed EXECUTOR-side (one task
-        per touched file, applyInPandas); only the packed blobs cross
-        to the driver — O(deleted rows / 8) bytes, never row tuples."""
+    def _pack_coords_to_positions(
+        self, coords: DataFrame, files: list[str]
+    ) -> dict:
+        """(__file, __pos) rows of a scan of ``files`` → {manifest
+        path: sorted int64 positions}. Positions are bitmap-packed
+        EXECUTOR-side (one task per touched file, applyInPandas); only
+        the packed blobs cross to the driver — O(deleted rows / 8)
+        bytes, never row tuples — where the reader's spelling maps back
+        to the manifest path (:func:`reader_path`)."""
         import pandas as _pd
 
         encode = self._dv_encode
@@ -5363,18 +5384,13 @@ class LakehouseTable:
             )
 
         packed = (
-            coords.select(
-                F.regexp_replace("__file", "^file:/+", "/").alias(
-                    "__file"
-                ),
-                "__pos",
-            )
-            .groupBy("__file")
+            coords.groupBy("__file")
             .applyInPandas(_pack, "f string, blob binary, card long")
             .collect()
         )
+        back = {reader_path(f): f for f in files}
         return {
-            r["f"]: self._dv_decode(bytes(r["blob"])) for r in packed
+            back[r["f"]]: self._dv_decode(bytes(r["blob"])) for r in packed
         }
 
     def update_where_dv(
@@ -5425,7 +5441,7 @@ class LakehouseTable:
             if not src.limit(1).count():
                 return None, []
             new_pos = self._pack_coords_to_positions(
-                src.select("__file", "__pos")
+                src.select("__file", "__pos"), scoped
             )
             user_cols = [
                 c
@@ -6182,30 +6198,13 @@ class LakehouseTable:
             int(e["cardinality"])
             for e in manifest.get("delete_vectors", {}).values()
         )
-        live = set(manifest["files"])
-        for entry in manifest.get("delete_files", []):
-            for tgt, n in self._pos_coord_counts(entry).items():
-                if tgt in live:
-                    total -= n
+        total -= sum(
+            len(p)
+            for p in self._read_pos_coords(
+                manifest.get("delete_files", []), manifest["files"]
+            ).values()
+        )
         return total
-
-    def _pos_coord_counts(self, entry: dict) -> dict[str, int]:
-        """Per-target-file coordinate counts for one pos-delete entry.
-        Coordinate parquets store ``file:///``-URIs in ``__file``;
-        manifests store plain paths — normalize before keying."""
-        from . import encryption as E
-
-        per_file: dict[str, int] = {}
-        for kf in entry["files"]:
-            t = E.read_table_auto(
-                kf, self._maybe_key(), columns=["__file"]
-            )
-            for fname, n in (
-                t.column("__file").to_pandas().value_counts().items()
-            ):
-                key = re.sub(r"^file:/+", "/", str(fname))
-                per_file[key] = per_file.get(key, 0) + int(n)
-        return per_file
 
     def manifests(self, version: int | str | None = None) -> DataFrame:
         """``<table>.manifests`` metadata table (Iceberg's manifest-list
@@ -6268,8 +6267,9 @@ class LakehouseTable:
 
         Coordinates whose target data file is no longer in the
         manifest (CoW rewrites carry pos entries verbatim after
-        removing their targets) surface as kind ``pos_stale`` so
-        maintenance planners don't over-estimate pending delete mass."""
+        removing their targets) surface as kind ``pos_stale``, named as
+        stored (the reader's spelling), so maintenance planners don't
+        over-estimate pending delete mass."""
         v = self._resolve_version(version)
         manifest = self._read_manifest(v)
         live = set(manifest["files"])
@@ -6280,8 +6280,10 @@ class LakehouseTable:
             )
         for entry in manifest.get("delete_files", []):
             if entry.get("pos"):
-                for tgt, n in sorted(
-                    self._pos_coord_counts(entry).items()
+                for tgt, p in sorted(
+                    self._read_pos_coords(
+                        [entry], live, stale=True
+                    ).items()
                 ):
                     rows.append(
                         (
@@ -6289,7 +6291,7 @@ class LakehouseTable:
                             "pos" if tgt in live else "pos_stale",
                             ";".join(entry["files"]),
                             int(entry["seq"]),
-                            n,
+                            len(p),
                         )
                     )
             else:
@@ -6822,27 +6824,13 @@ class LakehouseTable:
             )
         ):
             return None
-        from urllib.parse import urlparse
-
         def compute(base: int) -> tuple[dict, list[str]]:
             manifest = self._read_manifest(base)
-            pos_entries = [
-                d for d in manifest.get("delete_files", []) if d.get("pos")
-            ]
-            coord_files = [f for d in pos_entries for f in d["files"]]
-            # coordinates store the reader's file URI (file:///...); the
-            # manifest stores plain paths — normalize before intersecting
-            targeted = (
-                {
-                    urlparse(r["__file"]).path
-                    for r in self.spark.read.parquet(*coord_files)
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                }
-                & set(manifest["files"])
-                if pos_entries
-                else set()
+            targeted = set(
+                self._read_pos_coords(
+                    [d for d in manifest.get("delete_files", []) if d.get("pos")],
+                    manifest["files"],
+                )
             )
             untouched = [f for f in manifest["files"] if f not in targeted]
             scratch: list[str] = []

@@ -315,12 +315,18 @@ def _schema_auto(path: str):
 
 
 def _norm_path(v: str) -> str:
-    """Coordinate files store the parquet reader's file URI
-    (file:///...); manifests store plain paths — normalize."""
+    """A file URI (``file:/...`` as coordinate files store the parquet
+    reader's path, ``file:///...`` as users may pass a table path) as
+    the plain path manifests store. The reader percent-escapes the path
+    (``sources.lakehouse.reader_path``); ``unquote``, not
+    ``unquote_plus``, undoes it, since ``+`` stays literal there."""
+    from urllib.parse import unquote
+
     if v.startswith("file:"):
         v = v[5:]
         while v.startswith("//"):
             v = v[1:]
+        v = unquote(v)
     return v
 
 
